@@ -1,9 +1,12 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract (PySpark target): ``entry``, ``queries``, ``oracle_sql``.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke check.  Every ``queries()[name]`` pairs with
+``oracle_sql()[name]``, a DuckDB twin; the operator gate is
+
+    python tools/selfcheck.py --sf /root/testdata/sf0.01
+
+which runs each query and compares it against its oracle (row-count +
+schema + order-insensitive value hash).
 
 Implementation lives in ``mergeextractor_spark/``; queries register
 themselves in ``mergeextractor_spark.registry``.
@@ -42,5 +45,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB twins for every SQL-expressible query; keys without an entry
-    get the driver's rows-only check."""
+    get a rows-only check."""
     return {key: q.oracle for key, q in load_all().items() if q.oracle is not None}

@@ -55,7 +55,7 @@ from .text_queries import _tokens
     "the tail); the thirds cut runs via _util.partitioned_ntile "
     "(range-partitioned two-phase rank + broadcast per-lang offsets), "
     "not a per-lang window — a hot language would otherwise sort "
-    "through one task (VERDICT r8 item 2).",
+    "through one task.",
     eager=True,  # construction collects the range-partition offsets
 )
 def sample_logprob_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -108,7 +108,7 @@ def clf_score(toks):
     classifier fold: text_hash_classifier, eval_calibration_bins and
     sample_anneal_mix all build from this one expression (and their
     oracles from CLF_WEIGHT_SQL), so the stand-in classifier cannot
-    silently diverge across keys (r8 review)."""
+    silently diverge across keys."""
     return F.aggregate(
         F.transform(toks, clf_weight), F.lit(0.0), lambda acc, x: acc + x
     ) / F.greatest(F.size(toks), F.lit(1))
@@ -248,17 +248,10 @@ def eval_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 NGRAM_OVERLAP_N = 8  # same shingle width as the decontamination screen
 
-# The sorted source list is a pure function of the fixture data and a
-# bounded dimension (the _probed_cids boundedness class), so it is
-# memoized per (sf_dir, source mtime) like _BATCH_PARTS_MEMO — benchmark
-# loops skip the collect job, regenerated fixtures miss.
-_OVERLAP_SRCS_MEMO: dict[tuple[str, float], list[str]] = {}
-
-
 def _sql_escape(s: str) -> str:
     """Escape a string for interpolation into a single-quoted Spark SQL
     literal: Spark's parser treats backslash as an escape inside single
-    quotes (ADVICE r14: 'a\\b' parses as 'a\\x08', so an unescaped
+    quotes ('a\\b' parses as 'a\\x08', so an unescaped
     backslash in a source name would silently desync the map/catalog
     entries from the real column value) — escape backslashes FIRST,
     then double the quotes.  Round-trip pinned in tests/test_contract.py."""
@@ -266,19 +259,16 @@ def _sql_escape(s: str) -> str:
 
 
 def _overlap_sources(spark: SparkSession, sf_dir: str) -> list[str]:
-    from .scale_queries import _source_mtime
-
-    key = (sf_dir, _source_mtime(sf_dir, ("documents",)))
-    if key not in _OVERLAP_SRCS_MEMO:
-        _OVERLAP_SRCS_MEMO[key] = [
-            r[0]
-            for r in t(spark, sf_dir, "documents")
-            .select("source")
-            .distinct()
-            .orderBy("source")
-            .collect()
-        ]
-    return _OVERLAP_SRCS_MEMO[key]
+    """The sorted source list, collected on the driver on every
+    construction (a bounded dimension: one row per source)."""
+    return [
+        r[0]
+        for r in t(spark, sf_dir, "documents")
+        .select("source")
+        .distinct()
+        .orderBy("source")
+        .collect()
+    ]
 
 
 @register(
@@ -334,7 +324,7 @@ def agg_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole-stage codegen after the Generate (OPTIMIZATION_r14.md). Same
     # gram text, same md5, same multiset of rows — map-side either way.
     #
-    # Source sets ride a LONG BITMASK (r14): `source` is a bounded
+    # Source sets ride a LONG BITMASK: `source` is a bounded
     # dimension (20 fixture values; subcorpora stay in the dozens at
     # 100 TB), so the per-gram distinct source set is bit_or over
     # per-source bits — a fully codegen'd HashAggregate with map-side
@@ -481,8 +471,8 @@ def agg_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rank runs via _util.partitioned_row_number (two-phase rank + "
     "broadcast per-source offsets) — Heaps-law keeps the vocab table "
     "well under corpus size, but a web-scale vocab with URLs/typos can "
-    "still reach ~1e9 rows, too big for one task per source (the r9 "
-    "sweep of the VERDICT r8 item 2 class); the slope is "
+    "still reach ~1e9 rows, too big for one task per source; the "
+    "slope is "
     "covar_pop/var_pop, both map-side-combinable aggregates.",
     eager=True,  # construction collects the range-partition offsets
 )
@@ -618,8 +608,8 @@ ANNEAL_SHARE = 0.3  # token share of the anneal (phase-2) stage
     "main <1. Composes the classifier, the decile cut, and the budget "
     "normalization in ONE single-scan plan: the decile cut runs via "
     "_util.partitioned_ntile (range-partitioned two-phase rank + "
-    "broadcast per-lang offsets, never a single-task per-lang sort — "
-    "VERDICT r8 item 2) over (doc_id, lang, n_tok, prob) only, and the "
+    "broadcast per-lang offsets, never a single-task per-lang sort) "
+    "over (doc_id, lang, n_tok, prob) only, and the "
     "phase totals are a 2-row aggregate broadcast back.",
     eager=True,  # construction collects the range-partition offsets
 )
@@ -633,13 +623,13 @@ def sample_anneal_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(toks).alias("n_tok"),
         clf_prob(toks).alias("prob"),
     )
-    # per-lang top-decile cut via the two-phase rank (VERDICT r8 item 2:
-    # a per-lang ntile window is a single-task sort of the hot language
+    # per-lang top-decile cut via the two-phase rank (a per-lang ntile
+    # window is a single-task sort of the hot language
     # at 100 TB). partitioned_ntile checkpoints its ranked table, so the
     # phase totals and the output below both read the SAME materialized
     # frame — the corpus is still scanned once, the phase totals run as
     # a 2-row aggregate + broadcast join (never an unpartitioned window
-    # over the full per-document table — r8 review).
+    # over the full per-document table).
     tiled = partitioned_ntile(
         scored, ["lang"], [F.desc("prob"), F.asc("doc_id")], 10, out="__tile"
     )
@@ -667,7 +657,7 @@ def sample_anneal_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     share = F.when(F.col("phase") == "anneal", ANNEAL_SHARE).otherwise(
         1 - ANNEAL_SHARE
     )
-    # zero-mass guard (r8 ADVICE): a phase whose documents are all
+    # zero-mass guard: a phase whose documents are all
     # empty-text has phase_tok=0 — emit 0.0 on both engines instead of
     # NULL (Spark) vs inf (DuckDB), the token_budget_frame pattern.
     weight = F.when(

@@ -214,8 +214,8 @@ def _minhash_agg_cols(n_hashes: int = N_HASHES):
 
 
 # At most one exploded-shingle table stays cached per session: each new
-# minhash invocation unpersists the previous one (VERDICT r2 item 7 — a bare
-# .cache() leaked one table per call and spammed "already cached" warnings).
+# minhash invocation unpersists the previous one (a bare .cache() would
+# leak one table per call and spam "already cached" warnings).
 _LIVE_SHINGLE_CACHE: list[DataFrame] = []
 
 
@@ -229,7 +229,7 @@ def _cache_shingles(sh: DataFrame) -> DataFrame:
             # sameResult compares analyzed plans only — two sessions reading
             # the same path produce plan-equal DataFrames, so the owning
             # session must match too or one session would silently receive
-            # a DataFrame bound to the other's JVM state (ADVICE r3).
+            # a DataFrame bound to the other's JVM state.
             if prev.sparkSession is sh.sparkSession and prev._jdf.queryExecution().analyzed().sameResult(
                 sh._jdf.queryExecution().analyzed()
             ):
@@ -328,7 +328,7 @@ def _spread_doc_shingles(d: DataFrame) -> DataFrame:
     "text. No join hints anywhere: on dup-heavy corpora the verified "
     "candidate set is billions of rows, so AQE must be free to pick a "
     "shuffle join (a forced broadcast caps the operator at executor "
-    "memory — VERDICT r2 item 2).",
+    "memory).",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_pairs(spark, sf_dir)
@@ -367,9 +367,9 @@ def minhash_pairs_df(
     one tools/stress.py drives at K× replication."""
     sh = _cache_shingles(_spread_doc_shingles(d))
     sig = sh.groupBy("doc_id").agg(*_minhash_agg_cols(n_hashes))
-    # single-pass banding (r14, _bands_of): the inline b-way union this
-    # replaces evaluated the signature aggregate — 6 md5s per shingle —
-    # once per band branch
+    # single-pass banding (_bands_of): an inline b-way union would
+    # evaluate the signature aggregate — 6 md5s per shingle — once per
+    # band branch
     bands = _bands_of(sig, n_hashes, band_size)
     a = bands.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
     b = bands.select(F.col("doc_id").alias("doc_b"), "band", "bucket")
@@ -441,7 +441,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = spread(t(spark, sf_dir, "documents"))
-    # per-doc distinct shingles map-side (r14, the dedup_simhash fix):
+    # per-doc distinct shingles map-side (as in dedup_simhash):
     # (doc_id, shingle) distinct == array_distinct before the explode,
     # minus the corpus-wide distinct Exchange
     sh = d.select(
@@ -512,7 +512,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = spread(t(spark, sf_dir, "documents"))
-    # per-doc distinct shingles map-side (r14, the dedup_simhash fix)
+    # per-doc distinct shingles map-side (as in dedup_simhash)
     sh = d.select(
         "doc_id",
         F.explode(F.array_distinct(shingles(F.col("text")))).alias("shingle"),
@@ -583,7 +583,7 @@ def _simhash_bit_exprs(engine: str) -> list[str]:
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(t(spark, sf_dir, "documents"))
-    # per-doc distinct tokens MAP-SIDE (r14): distinct over (doc_id, tok)
+    # per-doc distinct tokens MAP-SIDE: distinct over (doc_id, tok)
     # is by definition per-document, so array_distinct before the explode
     # produces the identical row set without the corpus-wide distinct
     # Exchange the .distinct() form paid — one shuffle (the signature
@@ -659,7 +659,7 @@ _HAM64 = "(" + "+".join(f"bit_count(xor(a.b{k}, b.b{k}))" for k in range(4)) + "
     "which at most 3 of 4 12-bit sub-blocks are corrupted, so some "
     "sub-block is intact too (double pigeonhole) — recall equals the "
     "naive all-pairs scan, which the oracle keeps to prove it. The "
-    "secondary block exists purely for scale (VERDICT r2 item 4): a "
+    "secondary block exists purely for scale: a "
     "16-bit key gives <= 65,536 buckets per band, quadratic again at "
     "10^8+ docs; 28 bits gives ~2.7e8 buckets. 16 keys per doc instead "
     "of 4 is the price. Single-hop assignment (no transitive closure), "
@@ -667,7 +667,7 @@ _HAM64 = "(" + "+".join(f"bit_count(xor(a.b{k}, b.b{k}))" for k in range(4)) + "
 )
 def dedup_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(t(spark, sf_dir, "documents"))
-    # per-doc distinct tokens map-side — same fix as dedup_simhash (r14)
+    # per-doc distinct tokens map-side — same as dedup_simhash
     toks = d.select(
         "doc_id", F.explode(F.array_distinct(words(F.col("text")))).alias("tok")
     )
@@ -849,9 +849,9 @@ def connected_components(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
     the fixpoint is the component minimum — but shortcutting halves the
     remaining label-chain length each round, turning the O(diameter)
     round count of plain propagation into O(log diameter) (the
-    Shiloach-Vishkin / hash-to-min shape; VERDICT r3 item 6 — a plain
-    propagation raises on path-shaped components with diameter > 64,
-    this version handles them in ~log2(diameter) rounds).
+    Shiloach-Vishkin / hash-to-min shape — a plain propagation raises on
+    path-shaped components with diameter > 64, this version handles them
+    in ~log2(diameter) rounds).
 
     Only nodes that appear in ``edges`` get a row — on a dedup corpus the
     isolated majority never enters the loop; callers union them back as
@@ -869,7 +869,7 @@ def connected_components(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
     # Cap is a safety valve, not the convergence criterion: the loop exits
     # on the changed==0 fixpoint, and with doubling 64 rounds covers any
     # physically possible diameter. Exceeding it raises instead of
-    # silently returning partial labels (ADVICE r2).
+    # silently returning partial labels.
     for _ in range(max_rounds):
         nbr = edges.join(
             labels.select(F.col("doc_id").alias("dst"), "component_id"), "dst"
@@ -889,7 +889,7 @@ def connected_components(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
         new_labels = (
             prop.join(parent, "component_id")
             .select("doc_id", F.col("_short").alias("component_id"))
-            # lazy (r14): the convergence count below is already a
+            # lazy: the convergence count below is already a
             # mandatory blocking job, so the cut rides inside it
             .transform(lambda df: truncate_lineage(df, eager=False))
         )
@@ -978,8 +978,8 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # never reaches the output) and shared-window detection as a single
     # window pass — min(doc_id) != max(doc_id) over the gh partition is
     # countDistinct(doc_id) >= 2 — instead of the aggregate + join-back
-    # that evaluated and shuffled the window-hash map stage twice (r14,
-    # the dedup_span_merge A/B: 2.64 -> 1.39 s executor CPU)
+    # that would evaluate and shuffle the window-hash map stage twice
+    # (dedup_span_merge A/B: 2.64 -> 1.39 s executor CPU)
     g = tok.select(
         "doc_id",
         "w",
@@ -1216,7 +1216,7 @@ def dedup_span_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gh is the 16-BYTE unhex'd md5 (bijective with the hex string, so
     # grouping semantics are untouched) — it only partitions the window
     # below and never reaches the output, and binary keys shuffle and
-    # compare at half the hex string's width (r14)
+    # compare at half the hex string's width
     g = tok.select(
         "doc_id",
         "w",
@@ -1228,7 +1228,7 @@ def dedup_span_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5(F.concat_ws(" ", F.slice(F.col("w"), F.col("start_pos"), SPAN_W)))
         ).alias("gh"),
     )
-    # shared-window detection in ONE pass (r14): min(doc_id) != max(doc_id)
+    # shared-window detection in ONE pass: min(doc_id) != max(doc_id)
     # over the gh partition is exactly countDistinct(doc_id) >= 2, so the
     # aggregate + join-back — which evaluated the whole window-hash map
     # stage twice and shuffled it twice — collapses to one window over one
@@ -1386,10 +1386,10 @@ def entity_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def eval_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
-    # LAZY-checkpointed, not _cache_shingles (r14): this plan reads sh
-    # from four subtrees (sig, sizes, both verify sides), and the bare
-    # inline explode re-ran the shingle transform per subtree (16.4 s
-    # isolated executor CPU). The SQL-cache route regressed instead
+    # LAZY-checkpointed, not _cache_shingles: this plan reads sh from
+    # four subtrees (sig, sizes, both verify sides), and a bare inline
+    # explode re-runs the shingle transform per subtree (16.4 s
+    # isolated executor CPU). The SQL-cache route regresses instead
     # (14.7 -> 135 s — the cached relation's stats flip the candidate
     # joins off their broadcast plan), while the lazy localCheckpoint
     # materializes once and keeps every join strategy: 16.4 -> 5.4 s.
@@ -1401,7 +1401,7 @@ def eval_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=False,
     )
     sig = sh.groupBy("doc_id").agg(*_minhash_agg_cols())
-    # single-pass banding (r14, _bands_of) — same fix as minhash_pairs_df
+    # single-pass banding (_bands_of) — same as minhash_pairs_df
     bands = _bands_of(sig)
     cand = (
         bands.alias("a")
@@ -1492,7 +1492,7 @@ def dedup_source_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Incremental cross-batch MinHash dedup (VERDICT r12 item 5): a PERSISTED
+# Incremental cross-batch MinHash dedup: a PERSISTED
 # band-bucket store probed by each new ingest batch — the
 # ivf_store_write/probe pattern applied to the LSH bands above.  The
 # one-shot keys (dedup_minhash_lsh etc.) dedup a corpus SNAPSHOT; at
@@ -1514,7 +1514,7 @@ def _bands_of(sig: DataFrame, n_hashes: int = N_HASHES, band_size: int = BAND_SI
     incremental store path.
 
     One explode over a literal array of (band, bucket) structs instead of
-    a b-way union of selects (r14, guide §2.4): the union form evaluates
+    a b-way union of selects (guide §2.4): the union form evaluates
     the signature-aggregate subtree once PER BAND unless ReuseExchange
     happens to dedup it, while the Generate form reads the aggregate once
     by construction — same (doc_id, band, bucket) multiset either way
@@ -1582,8 +1582,7 @@ def ensure_minhash_store(spark: SparkSession, sf_dir: str) -> str:
     The directory suffix folds in a code-parameter fingerprint
     (N_HASHES/BAND_SIZE/INCR_BATCH_MOD/prefix-len/shingle-n) so a store
     written by OLDER CODE with different banding parameters is never
-    silently reused against an oracle that recomputes bands from source
-    (ADVICE r13)."""
+    silently reused against an oracle that recomputes bands from source."""
     import hashlib
     import os
     import shutil
@@ -1649,33 +1648,17 @@ def dedup_minhash_store_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_store_read(spark, path).select("doc_id", "band", "bucket", "bpfx")
 
 
-# Probe partition lists are a pure function of the fixture data, so they
-# are memoized per (sf_dir, source mtime) like _PROBE_CIDS_MEMO —
-# benchmark loops skip the collect job, regenerated fixtures miss.
-_BATCH_PARTS_MEMO: dict[tuple[str, float], tuple[list[int], list[str]]] = {}
-
-
-def _batch_band_parts(
-    bands_b: DataFrame, sf_dir: str
-) -> tuple[list[int], list[str]]:
+def _batch_band_parts(bands_b: DataFrame) -> tuple[list[int], list[str]]:
     """Distinct (band, bucket-prefix) partitions the batch can probe —
-    driver-side, bounded by bands x 16 hex prefixes (48 at fixture
-    parameters, a few thousand in production), never by corpus or
-    batch size."""
-    from .scale_queries import _source_mtime
-
-    memo_key = (sf_dir, _source_mtime(sf_dir, ("documents",)))
-    if memo_key not in _BATCH_PARTS_MEMO:
-        rows = (
-            bands_b.select("band", F.substring("bucket", 1, 1).alias("bpfx"))
-            .distinct()
-            .collect()
-        )
-        _BATCH_PARTS_MEMO[memo_key] = (
-            sorted({r.band for r in rows}),
-            sorted({r.bpfx for r in rows}),
-        )
-    return _BATCH_PARTS_MEMO[memo_key]
+    collected on the driver on every construction, bounded by bands x 16
+    hex prefixes (48 at fixture parameters, a few thousand in
+    production), never by corpus or batch size."""
+    rows = (
+        bands_b.select("band", F.substring("bucket", 1, 1).alias("bpfx"))
+        .distinct()
+        .collect()
+    )
+    return sorted({r.band for r in rows}), sorted({r.bpfx for r in rows})
 
 
 @register(
@@ -1728,7 +1711,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = d.filter(F.col("doc_id") % INCR_BATCH_MOD == 0)
     sh_b = _cache_shingles(_spread_doc_shingles(batch))
     bands_b = _bands_of(sh_b.groupBy("doc_id").agg(*_minhash_agg_cols()))
-    bands_hit, pfx_hit = _batch_band_parts(bands_b, sf_dir)
+    bands_hit, pfx_hit = _batch_band_parts(bands_b)
     store = minhash_store_read(spark, path).filter(
         F.col("band").isin(bands_hit) & F.col("bpfx").isin(pfx_hit)
     )
@@ -1751,7 +1734,7 @@ def minhash_verify_pairs(
     pipeline_ingest_cycle composes the identical plan."""
     # the candidate list is checkpointed: it feeds BOTH the committed-side
     # semi-join prune and the verify join, and it is candidate-bounded
-    # (r13 A/B at derived sf1: 1,306 candidates from 50k docs)
+    # (A/B at derived sf1: 1,306 candidates from 50k docs)
     cand = truncate_lineage(
         bands_b.join(store.select("band", "bucket", F.col("doc_id").alias("dup_of")),
                      ["band", "bucket"])
@@ -1765,7 +1748,7 @@ def minhash_verify_pairs(
     # WHOLE committed corpus per construction: 31M shuffled rows and
     # 65 s/run at derived sf1 vs candidate-bounded after the fix).
     # AQE picks the broadcast for the small checkpointed list and falls
-    # back to shuffle on dup-heavy corpora (the r2 no-hints rule).
+    # back to shuffle on dup-heavy corpora (no join hints).
     cand_docs = cand.select(F.col("dup_of").alias("doc_id")).distinct()
     sh_c = committed.join(cand_docs, "doc_id", "leftsemi").select(
         "doc_id",
@@ -1829,10 +1812,10 @@ def minhash_store_commit(spark: SparkSession, path: str,
     prefix and the touched partition directories are renamed into
     place after the job completes — the stage-and-atomic-rename
     protocol this docstring previously only pointed production at.
-    One write job materializes the merge (r14: the previous
-    checkpoint-then-dynamic-overwrite shape paid the merge twice —
-    once into executor storage, once into files — ~1.2 s executor-CPU
-    per commit at sf0.1 for the identical on-disk result), and no task
+    One write job materializes the merge (a checkpoint-then-dynamic-
+    overwrite shape would pay the merge twice — once into executor
+    storage, once into files — ~1.2 s executor-CPU per commit at sf0.1
+    for the identical on-disk result), and no task
     ever reads a file the commit is about to replace because the
     replacement happens driver-side after the write.  Returns the
     number of partitions rewritten — bounded by bands x 16 at fixture
@@ -1860,12 +1843,12 @@ def minhash_store_commit(spark: SparkSession, path: str,
         ],
     )
     existing = minhash_store_read(spark, path).filter(pair_pred)
-    # cluster by the partition key BEFORE the distinct (guide §2.4, r15):
+    # cluster by the partition key BEFORE the distinct (guide §2.4):
     # hash-partitioning on (band, bpfx) colocates every full-tuple group
     # (the partition key is a subset of the distinct key), so the
     # dedup aggregate runs in place on the clustered exchange — ONE
-    # Exchange instead of the r14 distinct-then-repartition pair (plan:
-    # Exchange 2 → 1 in the commit write job) — and each write task
+    # Exchange instead of a distinct-then-repartition pair — and each
+    # write task
     # still owns whole (band, bpfx) groups: one file per touched
     # partition, never one per (task x partition) pair.
     merged = (
@@ -1880,9 +1863,9 @@ def minhash_store_commit(spark: SparkSession, path: str,
         # swaps in whole (a crash mid-loop is recovered by the replay —
         # re-commit is idempotent by the DISTINCT union).  The loop is
         # pure driver-side filesystem metadata work on <= bands x 16
-        # independent directories — threaded (r15, VERDICT item 1c: the
-        # serial loop charged one durable-volume round-trip per
-        # partition to the commit's wall).  Band-level parent dirs are
+        # independent directories — threaded (a serial loop charges one
+        # durable-volume round-trip per partition to the commit's
+        # wall).  Band-level parent dirs are
         # pre-created serially so the workers never race makedirs.
         for band in {r.band for r in parts}:
             os.makedirs(os.path.join(path, f"band={band}"), exist_ok=True)
@@ -1937,7 +1920,7 @@ def dedup_minhash_store_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh_b = _cache_shingles(_spread_doc_shingles(batch))
     # checkpoint: the commit evaluates its bands_new input twice (the
     # partition-list collect and the merged overwrite) — the cut runs
-    # the signature aggregate once instead (r14, same fix as the cycle)
+    # the signature aggregate once instead (as in the ingest cycle)
     bands_b = truncate_lineage(
         _bands_of(sh_b.groupBy("doc_id").agg(*_minhash_agg_cols()))
     )

@@ -66,9 +66,9 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = e.filter(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
     )
-    # Cell assignment MAP-SIDE over the packed broadcast codebook (r14,
-    # assign_nearest): same dots, same (d, -cid) argmax as the previous
-    # crossJoin + max_by aggregate, but zero candidate-row blowup, zero
+    # Cell assignment MAP-SIDE over the packed broadcast codebook
+    # (assign_nearest): same dots, same (d, -cid) argmax as a crossJoin
+    # + max_by aggregate, but zero candidate-row blowup, zero
     # Exchange, zero SortAggregate — assignment is literally the one map
     # stage the 100 TB docstring promises.
     assign = assign_nearest(e, cents).select("vec_id", "cid")
@@ -87,8 +87,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("qid"), "cid")
     )
     cand = qprobe.join(assign, "cid").filter(F.col("vec_id") != F.col("qid")).select("qid", "vec_id")
-    # broadcast ONLY the query vectors (r2 bench regression: broadcasting
-    # the full embedding table as the query side cost ~0.25 s/run at sf0.1
+    # broadcast ONLY the query vectors (broadcasting the full embedding
+    # table as the query side cost ~0.25 s/run at sf0.1
     # and would be a multi-GB broadcast at corpus scale)
     # norms once per side, not per candidate pair (cosine_pre)
     qe = e.filter(F.col("vec_id") < N_QUERIES).select(
@@ -195,9 +195,9 @@ _TRAINED_RECALL_ORACLE = f"""
 
 @register(
     "ann_ivf_trained",
-    # r11 graduation — the last float-ordering-sensitive key earns a
-    # RECALL-FLOOR oracle: the trained centroids genuinely vary at the
-    # last float bit with partitioning (k-means|| reduces float sums in
+    # the float-ordering-sensitive key carries a RECALL-FLOOR oracle: the
+    # trained centroids genuinely vary at the last float bit with
+    # partitioning (k-means|| reduces float sums in
     # nondeterministic order), so the neighbor LIST can never hash — but
     # the exact ground-truth pair count CAN (recomputed independently by
     # DuckDB via the brute-force ranking), and the claim that trained-IVF
@@ -214,7 +214,7 @@ _TRAINED_RECALL_ORACLE = f"""
     f"{NPROBE_TRAINED}/{N_CELLS_TRAINED} cells). On real embedding "
     "distributions (which cluster) the same plan gives high recall at "
     "small scan fractions; nprobe is the recall/cost dial. Hash-verified "
-    "(r11) via the recall-floor oracle: the exact top-3 pair count is "
+    "via the recall-floor oracle: the exact top-3 pair count is "
     "recomputed by DuckDB's brute-force ranking and above_floor asserts "
     "recall@3 >= 0.5 — the trained codebook itself is float-ordering-"
     "sensitive by nature, so the summary, not the list, is the stable "
@@ -271,7 +271,7 @@ def trained_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     cdf = spark.createDataFrame(cents, ["cid", "ce"]).coalesce(1)
     # same shape as ann_ivf_topk: map-side packed-codebook assignment
-    # (assign_nearest, r14), window only over the filtered query rows
+    # (assign_nearest), window only over the filtered query rows
     assign = assign_nearest(e, cdf).select("vec_id", "cid")
     qdots = (
         e.filter(F.col("vec_id") < N_QUERIES)
@@ -437,7 +437,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         vsubs.join(F.broadcast(cents), "sub")
         .select("vec_id", "sub", "code", dot("ve", "ce").alias("d"))
     )
-    # map-side packed-codebook encode (r14, _encode_codes): vdots below
+    # map-side packed-codebook encode (_encode_codes): vdots below
     # only feeds the query lookup, where the vec_id filter prunes it to
     # the query rows at the scan
     codes = _encode_codes(vsubs, cents)
@@ -612,7 +612,7 @@ def _ivf_assign_probe(e: DataFrame) -> tuple[DataFrame, DataFrame]:
     cents = e.filter(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
     )
-    # map-side packed-codebook assignment (assign_nearest, r14): same
+    # map-side packed-codebook assignment (assign_nearest): same
     # dots and argmax rule, no candidate blowup / exchange / sort
     assign = assign_nearest(e, cents).select("vec_id", "cid")
     qdots = (
@@ -674,7 +674,7 @@ def _pq_encode_parts(
 def _encode_codes(
     vsubs: DataFrame, pcents: DataFrame, keep: tuple = ()
 ) -> DataFrame:
-    """(vec_id, sub) → argmax-dot ``code``, MAP-SIDE (r14): the 16-entry
+    """(vec_id, sub) → argmax-dot ``code``, MAP-SIDE: the 16-entry
     per-subspace codebook packs into 8 broadcast rows (one sorted
     (code, ce)-struct array per sub) and each (vector, sub) row takes
     ``array_max(transform(...))`` over its sub's array — the same dots
@@ -687,7 +687,7 @@ def _encode_codes(
     pc = pcents.groupBy("sub").agg(
         F.array_sort(F.collect_list(F.struct("code", "ce"))).alias("__cb")
     )
-    # one parsed expression (r15) — same rewrite as assign_nearest
+    # one parsed expression — same rewrite as assign_nearest
     from .vector_queries import _dot_sql
 
     entries = F.expr(
@@ -778,10 +778,10 @@ def ivf_store_write(spark: SparkSession, sf_dir: str, path: str) -> None:
     cents = e.filter(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
     )
-    # map-side packed-codebook assignment (assign_nearest, r14): the cid
-    # lands ON the embedding row, so the former assign-back join — which
-    # shuffled the raw vectors by vec_id just to re-attach their own
-    # cell — disappears; the write's partitionBy is the only exchange
+    # map-side packed-codebook assignment (assign_nearest): the cid
+    # lands ON the embedding row, so no assign-back join shuffles the
+    # raw vectors by vec_id just to re-attach their own cell; the write's
+    # partitionBy is the only exchange
     assign_nearest(e, cents).write.mode("overwrite").partitionBy("cid").parquet(path)
 
 
@@ -799,9 +799,8 @@ def ivf_store_probe(
 def _source_mtime(sf_dir: str, names: tuple[str, ...]) -> float:
     """Newest mtime across the given fixture parquet files/dirs — the
     freshness stamp for derived on-disk artifacts (bucketed tables, IVF
-    stores, memoized probe lists). Round-5 review: a path-only guard
-    silently served STALE derived data after fixtures were regenerated
-    in place (e.g. bench_scaling --rebuild)."""
+    stores): a path-only guard would serve STALE derived data after
+    fixtures are regenerated in place (e.g. bench_scaling --rebuild)."""
     import os
 
     newest = 0.0
@@ -824,9 +823,8 @@ def ensure_ivf_store(spark: SparkSession, sf_dir: str) -> str:
     interrupted write — or a store older than regenerated fixtures — is
     cleared and rewritten.  The suffix folds in the clustering
     parameter (N_CENTROIDS) so a store written by older code with a
-    different cell count is never silently reused (ADVICE r13 — the
-    ensure_minhash_store fix, applied to the store it was copied
-    from)."""
+    different cell count is never silently reused (the same rule as
+    ensure_minhash_store)."""
     import hashlib
     import os
     import shutil
@@ -844,23 +842,11 @@ def ensure_ivf_store(spark: SparkSession, sf_dir: str) -> str:
     return path
 
 
-# Probed-cid lists are a pure function of the fixture data (deterministic
-# codebook), so they are memoized per (sf_dir, source mtime) — repeat
-# constructions in a session (benchmark loops) skip the collect job, and
-# regenerated fixtures miss the memo instead of serving stale cells.
-_PROBE_CIDS_MEMO: dict[tuple[str, float], list[int]] = {}
-
-
-def _probed_cids(e: DataFrame, sf_dir: str) -> list[int]:
-    """Distinct cells probed by the query set — driver-side, bounded by
-    the CELL count (never the corpus), memoized per (sf_dir, mtime)."""
-    memo_key = (sf_dir, _source_mtime(sf_dir, ("embeddings",)))
-    if memo_key not in _PROBE_CIDS_MEMO:
-        _, qprobe = _ivf_assign_probe(e)
-        _PROBE_CIDS_MEMO[memo_key] = sorted(
-            r.cid for r in qprobe.select("cid").distinct().collect()
-        )
-    return _PROBE_CIDS_MEMO[memo_key]
+def _probed_cids(e: DataFrame) -> list[int]:
+    """Distinct cells probed by the query set — collected on the driver on
+    every construction, bounded by the CELL count (never the corpus)."""
+    _, qprobe = _ivf_assign_probe(e)
+    return sorted(r.cid for r in qprobe.select("cid").distinct().collect())
 
 
 @register(
@@ -883,7 +869,7 @@ def _probed_cids(e: DataFrame, sf_dir: str) -> list[int]:
 def ann_ivf_pq_refine_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = spread(t(spark, sf_dir, "embeddings"))
     path = ensure_ivf_store(spark, sf_dir)
-    cids = _probed_cids(e, sf_dir)
+    cids = _probed_cids(e)
     pool = _adc_shortlist(_ivf_pq_adc_scores(e))
     qe = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb")
@@ -946,7 +932,7 @@ def write_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
                                        -> clear and rewrite.
     An interrupted write therefore self-heals on the next call instead of
     raising LOCATION_ALREADY_EXISTS forever, and stale clusterings can
-    never serve a regenerated fixture's query (round-5 review).
+    never serve a regenerated fixture's query.
     """
     import hashlib
     import os
@@ -1035,8 +1021,8 @@ def pq_codes_write(spark: SparkSession, sf_dir: str, path: str) -> None:
     floats)."""
     e = spread(t(spark, sf_dir, "embeddings"))
     # both the cell assignment and the code encode are map-side packed-
-    # codebook projections now (r14), so the cid rides the row from the
-    # start and the former codes⋈assign re-shuffle disappears — the
+    # codebook projections, so the cid rides the row from the start and
+    # no codes⋈assign re-shuffle runs — the
     # whole encode is one map stage into the partitioned write
     cents = e.filter(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
@@ -1097,7 +1083,7 @@ def ann_ivf_pq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = spread(t(spark, sf_dir, "embeddings"))
     path = ensure_pq_store(spark, sf_dir)
-    cids = _probed_cids(e, sf_dir)
+    cids = _probed_cids(e)
     store_schema = T.StructType(
         [
             T.StructField("vec_id", T.LongType()),

@@ -34,7 +34,7 @@ hash-checkable): every cross-engine AGGREGATION is integer.
     lr_den·N stay within double's exact-integer range (< 2^53), which
     B=256 buckets and S=1e4 units guarantee by orders of magnitude
     (|g_b| <= S·N <= 1e4·N: exact up to N ~ 1e9 docs — beyond that,
-    switch both engines to true integral division) (ADVICE r13).
+    switch both engines to true integral division).
 So two engines can only disagree if their exp() differs in the last
 ulp AND that ulp lands within ~1e-12 of a residual rounding boundary —
 the same measure-zero class math_sigmoid already carries. Round 1 is
@@ -64,10 +64,10 @@ from ..registry import register
 CLF_BUCKETS = 256      # hashed feature space (md5 % B; production ~1e5+)
 CLF_SCALE = 10_000     # integer weight/residual units (1e-4 resolution)
 # Fixed GD rounds.  The timed bench suite overrides this DOWN via env
-# (VERDICT r13 item 5 — the two trainers were 21% of the r13 suite);
-# the oracle string is generated at import from the SAME constant, so a
-# reduced-round run still hash-matches its own oracle — the correctness
-# driver never sets the env and always gets the full 12.
+# (the two trainers would otherwise dominate the suite); the oracle
+# string is generated at import from the SAME constant, so a
+# reduced-round run still hash-matches its own oracle — the operator
+# gate never sets the env and always gets the full 12.
 CLF_ROUNDS = int(__import__("os").environ.get("SPARK_GRAFT_CLF_ROUNDS", "12"))
 
 
@@ -191,7 +191,7 @@ def clf_features(d: DataFrame, buckets: int = CLF_BUCKETS) -> DataFrame:
          % buckets).alias("b"),
     ).groupBy("doc_id", "b").agg(F.count("*").alias("x"))
     # intercept rows from the COUNTS frame, not a second distinct over
-    # the exploded tokens (r14): "docs with >= 1 token" is the same set
+    # the exploded tokens: "docs with >= 1 token" is the same set
     # either way, but this way the tokenize+explode pass is shared with
     # the counts aggregate (ReuseExchange) instead of running twice, and
     # the distinct reads |counts| grouped rows, not |tokens|
@@ -212,27 +212,15 @@ def clf_labels(d: DataFrame) -> DataFrame:
     )
 
 
-# Feature-bearing doc counts per (sf_dir, source mtime): N enters the
-# plan as a LITERAL (the lr denominator), and it is a pure function of
-# the fixture — the dedup._BATCH_PARTS_MEMO plan-construction-metadata
-# class, so repeat constructions (bench samples) skip the count job
-# (r15).  The memo key folds the fixture mtime so regenerated fixtures
-# miss instead of serving a stale N.
-_CLF_NDOCS_MEMO: dict[tuple[str, float], int] = {}
-
-
 def _clf_ndocs(spark: SparkSession, sf_dir: str) -> int:
-    from ..operators.scale_queries import _source_mtime
-
-    key = (sf_dir, _source_mtime(sf_dir, ("documents",)))
-    if key not in _CLF_NDOCS_MEMO:
-        _CLF_NDOCS_MEMO[key] = (
-            clf_features(t(spark, sf_dir, "documents"))
-            .select("doc_id")
-            .distinct()
-            .count()
-        )
-    return _CLF_NDOCS_MEMO[key]
+    """Feature-bearing doc count N, counted on every construction: it
+    enters the plan as a LITERAL (the lr denominator)."""
+    return (
+        clf_features(t(spark, sf_dir, "documents"))
+        .select("doc_id")
+        .distinct()
+        .count()
+    )
 
 
 def clf_train(
@@ -249,7 +237,7 @@ def clf_train(
     integer update — weights checkpointed per round."""
     S = CLF_SCALE
     spark = feat.sparkSession
-    # LAZY input checkpoints (r14, the PageRank lesson): an eager
+    # LAZY input checkpoints (as in PageRank): an eager
     # localCheckpoint is a blocking driver job, and the loop paid ~6
     # serial round trips per training (two inputs + w0 + every-second-
     # round w cuts). eager=False materializes each exactly once inside
@@ -357,7 +345,7 @@ def ensure_clf_store(spark: SparkSession, sf_dir: str,
     The suffix folds in a code-parameter fingerprint (buckets / scale /
     rounds / step schedule) so a store trained by older code or a
     reduced-round bench profile is never silently reused against an
-    oracle that retrains from source (the ADVICE-r13 store rule)."""
+    oracle that retrains from source."""
     import hashlib
     import os
     import shutil
@@ -392,7 +380,7 @@ def clf_store_read(spark: SparkSession, path: str) -> DataFrame:
 @register(
     "pipeline_classifier_distill",
     oracle=_clf_distill_oracle(),
-    doc="Flagship #10 (VERDICT r13 item 2): the closed classifier "
+    doc="Flagship #10: the closed classifier "
     "train→persist→apply distillation loop. Trains the "
     f"{CLF_ROUNDS}-round integer-GD classifier, persists the full "
     "257-row weight table to a parquet weight store (the minhash-store "

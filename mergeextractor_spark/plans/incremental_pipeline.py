@@ -26,8 +26,8 @@ Plan shape per batch:
    (idempotent replay). A crash before the rename leaves the store
    untouched (same discipline as sources/sinks.py merge_kv_store).
 
-Registered as ``pipeline_incremental_ingest`` with a FULL exact oracle
-(r11): the bloom is the md5-sliced one, so DuckDB recomputes every
+Registered as ``pipeline_incremental_ingest`` with a FULL exact oracle:
+the bloom is the md5-sliced one, so DuckDB recomputes every
 summary count — bit set, probe with false positives, exact-text dedup,
 token gate; content-exactness and idempotency stay pytest-pinned.
 """
@@ -113,10 +113,8 @@ def ingest_batch(
 
 @register(
     "pipeline_incremental_ingest",
-    # r11 graduation — a FULL exact oracle after all: the pipeline's
-    # bloom is the md5-sliced one (curation_queries.bloom_build — the
-    # registry note blaming Spark's seeded bloom_filter_agg was stale),
-    # so every count in the summary is deterministic and DuckDB
+    # a FULL exact oracle: the pipeline's bloom is the md5-sliced one
+    # (curation_queries.bloom_build), so every count in the summary is deterministic and DuckDB
     # recomputes the whole thing: the store-half bit set, the batch-half
     # probe (FPs included), the exact-text dedup, and the token gate.
     # The 20 re-keyed dup rows carry store TEXT, so they probe positive
@@ -155,7 +153,7 @@ def ingest_batch(
     "content is exact), the Gopher token gate filters, and the append "
     "commits atomically behind a batch marker — replaying the same "
     "batch appends zero rows. Returns the per-stage count summary, "
-    "hash-verified end-to-end (r11): the md5-sliced bloom makes every "
+    "hash-verified end-to-end: the md5-sliced bloom makes every "
     "count deterministic, so the oracle rebuilds the store bit set, "
     "the probe (false positives included), the exact-text dedup, and "
     "the token gate in SQL; exactness + idempotency + crash-recovery "
@@ -196,11 +194,6 @@ def pipeline_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 REKEY_BELOW = 50       # committed docs re-keyed into the batch (planted exact dups)
 REKEY_OFFSET = 1_000_000
-
-# probed-partition lists per (sf_dir, source mtime) — see the memo note
-# in pipeline_ingest_cycle (the dedup._BATCH_PARTS_MEMO class)
-_CYCLE_PARTS_MEMO: dict[tuple[str, float], list] = {}
-
 
 def _ingest_cycle_oracle() -> str:
     from ..operators.dedup import (
@@ -340,33 +333,22 @@ def pipeline_ingest_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition-list collect, the verify band-join, the survivor
     # anti-join, and the commit's own partition-list + merged write) —
     # without the cut each consumer re-runs the signature aggregate
-    # (r14 profile: commit alone re-evaluated the whole verify tail
-    # twice, 5.5 s executor-CPU of the cycle's 8.4 s).  LAZY since r15:
-    # the checkpoint's first consumer used to be the immediate parts
-    # collect (lazy bought nothing), but that collect is now memoized
-    # per (sf_dir, mtime), so on every warm construction the first
-    # consumer is the near-dup verify job — the cut materializes inside
-    # it instead of as its own blocking driver job.
+    # (profiled: commit alone re-evaluated the whole verify tail twice,
+    # 5.5 s executor-CPU of the cycle's 8.4 s).  LAZY: the cut
+    # materializes inside its first consumer, the partition-list collect
+    # below, instead of as a job of its own.
     bands_b = truncate_lineage(
         _bands_of(sh_b.groupBy("doc_id").agg(*_minhash_agg_cols())),
         eager=False,
     )
-    # the probed (band, bpfx) list is a pure function of the fixture
-    # (bands depend on text only, and the rekeyed rows carry committed
-    # TEXT) — memoized per (sf_dir, mtime) like dedup.py's
-    # _BATCH_PARTS_MEMO (plan-construction metadata, the _probed_cids
-    # boundedness class: <= bands x 16 rows), so repeat constructions
-    # skip one driver collect (r15)
-    from ..operators.scale_queries import _source_mtime
-
-    memo_key = (sf_dir, _source_mtime(sf_dir, ("documents",)))
-    if memo_key not in _CYCLE_PARTS_MEMO:
-        _CYCLE_PARTS_MEMO[memo_key] = (
-            bands_b.select("band", F.substring("bucket", 1, 1).alias("bpfx"))
-            .distinct()
-            .collect()
-        )
-    parts = _CYCLE_PARTS_MEMO[memo_key]
+    # the (band, bpfx) store partitions the batch can probe, collected on
+    # the driver on every construction: bounded by bands x 16 hex
+    # prefixes, never by corpus or batch size
+    parts = (
+        bands_b.select("band", F.substring("bucket", 1, 1).alias("bpfx"))
+        .distinct()
+        .collect()
+    )
     # empty batch (quiet ingest day): no band keys → no touched partitions
     # → the probed store slice is empty by construction
     pair_pred = (
@@ -393,10 +375,10 @@ def pipeline_ingest_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # 3+4. commit the survivors' band keys (partition-scoped, idempotent)
     # OVERLAPPED with the three store-independent summary counts (guide
-    # §2.6 extended to the commit itself — r15: the commit's write job
-    # previously ran as a serial phase before the counts even though
-    # batch/fresh/near never read the store; submitting the commit FIRST
-    # gives it FIFO priority and the counts back-fill its tail).  Only
+    # §2.6 extended to the commit itself: batch/fresh/near never read
+    # the store, so the commit's write job need not run before them;
+    # submitting the commit FIRST gives it FIFO priority and the counts
+    # back-fill its tail).  Only
     # n_store_docs must wait: it re-reads the POST-COMMIT store, which
     # the commit's driver-side partition renames are mutating until
     # f_commit resolves.

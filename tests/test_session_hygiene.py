@@ -1,12 +1,12 @@
-"""Session-storage hygiene pins (VERDICT r11 item 5).
+"""Session hygiene pins: checkpoint-storage sweeps and session defaults.
 
-The r11 benchmark-session storage-thrash cliff: ``localCheckpoint``
+The long-session storage-thrash cliff: ``localCheckpoint``
 blocks survive ``spark.catalog.clearCache()`` — the catalog call only
 clears the SQL CacheManager, while the RDD storage blocks pinned by
 every ``truncate_lineage``/``partitioned_*`` construction accumulate
 until a driver GC the ContextCleaner may never get on a large heap
 (measured 12 s → 278 s between two IDENTICAL runs at derived-sf1;
-PERFORMANCE.md r11).  ``_util.drain_persistent_rdds`` is the fix, wired
+PERFORMANCE.md).  ``_util.drain_persistent_rdds`` is the fix, wired
 into bench.py and tools/bench_scaling.py; these pins make sure neither
 half of the behavior silently rots: (a) clearCache alone really does
 leave the blocks behind (if a Spark upgrade changes that, the sweep can
@@ -21,7 +21,7 @@ import pytest
 def _n_persistent(spark) -> int:
     # Reaches through the py4j gateway (private API) — classic-session
     # only.  Under Spark Connect there is no _jsc; skip rather than
-    # crash so a Connect-based CI run degrades gracefully (ADVICE r12).
+    # crash so a Connect-based CI run degrades gracefully.
     if not hasattr(spark, "sparkContext") or not hasattr(
         spark.sparkContext, "_jsc"
     ):
@@ -45,7 +45,7 @@ def test_drain_persistent_rdds_clears_what_clearcache_leaks(spark):
     before = _n_persistent(spark)
     assert before > 0, "truncate_lineage must pin localCheckpoint blocks"
 
-    # the r11 cliff: the catalog sweep does NOT free checkpoint blocks
+    # the cliff: the catalog sweep does NOT free checkpoint blocks
     spark.catalog.clearCache()
     assert _n_persistent(spark) == before, (
         "clearCache() now frees localCheckpoint blocks — the Spark "
@@ -71,7 +71,7 @@ def test_drain_survives_empty_session(spark):
 
 
 def test_scratch_default_falls_back_when_shm_is_small(monkeypatch):
-    """VERDICT r14 item 3: the tmpfs spark.local.dir default must not
+    """The tmpfs spark.local.dir default must not
     point shuffle scratch at a nearly-full /dev/shm — below the
     free-space floor the factory returns None (Spark default), and the
     SPARK_GRAFT_LOCAL_DIR override always wins."""
@@ -103,3 +103,45 @@ def test_scratch_default_falls_back_when_shm_is_small(monkeypatch):
     assert _default_local_dir() == "/somewhere/nvme"
     monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", "")
     assert _default_local_dir() is None
+
+
+@pytest.mark.parametrize("raw", ["4GB", "", "abc"])
+def test_malformed_scratch_floor_warns_and_uses_default(monkeypatch, raw):
+    """A malformed SPARK_GRAFT_SCRATCH_MIN_GB warns and falls back to the
+    4 GiB floor instead of raising inside get_spark."""
+    import shutil
+    from collections import namedtuple
+
+    from mergeextractor_spark.session import _default_local_dir
+
+    usage = namedtuple("usage", "total used free")
+    monkeypatch.delenv("SPARK_GRAFT_LOCAL_DIR", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_MIN_GB", raw)
+
+    # 5 GiB free clears the 4 GiB fallback floor -> tmpfs path
+    monkeypatch.setattr(shutil, "disk_usage", lambda p: usage(8 << 30, 3 << 30, 5 << 30))
+    with pytest.warns(UserWarning, match="SPARK_GRAFT_SCRATCH_MIN_GB"):
+        assert _default_local_dir() == "/dev/shm/spark-local"
+
+    # 3 GiB free is below it -> Spark default
+    monkeypatch.setattr(shutil, "disk_usage", lambda p: usage(8 << 30, 5 << 30, 3 << 30))
+    with pytest.warns(UserWarning) as rec:
+        assert _default_local_dir() is None
+    assert any("GiB free" in str(w.message) for w in rec)
+
+
+def test_driver_heap_default_fits_the_host():
+    """The default driver heap is half of MemTotal, never more than the
+    host has and never more than 48g."""
+    from mergeextractor_spark.session import _driver_heap_default
+
+    with open("/proc/meminfo") as f:
+        here = f.read()
+    cap_mb = 48 * 1024
+    hosts = (here, "MemTotal:       15728640 kB\n", "MemTotal: 536870912 kB\nMemFree: 1 kB\n")
+    for meminfo in hosts:
+        total_mb = int(meminfo.split("MemTotal:")[1].split()[0]) // 1024
+        heap = _driver_heap_default(meminfo)
+        assert heap.endswith("m"), heap
+        assert 0 < int(heap[:-1]) <= min(total_mb, cap_mb), (heap, total_mb)
+    assert _driver_heap_default("MemTotal: 536870912 kB\n") == f"{cap_mb}m"

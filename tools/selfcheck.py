@@ -1,7 +1,7 @@
 """Self-check harness: run every registered query on Spark AND its DuckDB
 oracle, compare row count + columns + values (floats normalized), report
-per-key PASS/FAIL. Mirrors the driver's CORRECTNESS gate so parity bugs
-surface before a round ends.
+per-key PASS/FAIL. This is the operator gate: at sf0.01 every registered
+key must pass.
 
 Usage:
     python tools/selfcheck.py [--sf /root/testdata/sf0.01] [--keys k1,k2] [-q]
@@ -23,18 +23,21 @@ import duckdb  # noqa: E402
 import numpy as np  # noqa: E402
 
 from mergeextractor_spark.registry import load_all  # noqa: E402
-from mergeextractor_spark.session import get_spark  # noqa: E402
+from mergeextractor_spark.session import (  # noqa: E402
+    default_cpus,
+    default_driver_memory,
+    get_spark,
+)
 from mergeextractor_spark.sources.fixtures import TABLE_NAMES  # noqa: E402
 
 
 def norm_cell(v):
     """Normalize a cell to a type-tagged string.
 
-    The driver hashes values after a pandas round-trip, so an int64 74539 and
-    a float64 74539.0 hash DIFFERENTLY even though Python's ``==`` treats them
-    as equal. Tagging the type keeps this mirror as strict as the driver
-    (round-1 lesson: DuckDB HUGEINT -> float64 slipped through an untagged
-    compare).
+    Values are hashed after a pandas round-trip, so an int64 74539 and a
+    float64 74539.0 hash DIFFERENTLY even though Python's ``==`` treats them
+    as equal. Tagging the type keeps the compare strict (an untagged compare
+    lets DuckDB HUGEINT -> float64 drift slip through).
     """
     if isinstance(v, np.ndarray):
         v = v.tolist()
@@ -71,7 +74,7 @@ def main():
         "--vanilla",
         action="store_true",
         help="use a bare untuned SparkSession (200 shuffle partitions, no "
-        "pre-set confs) — the closest mirror of the driver's own session; "
+        "pre-set confs) — the closest mirror of a caller's own session; "
         "queries must self-tune through fixtures.table()",
     )
     args = ap.parse_args()
@@ -89,10 +92,10 @@ def main():
         from pyspark.sql import SparkSession
 
         spark = (
-            SparkSession.builder.master("local[32]")
+            SparkSession.builder.master(f"local[{default_cpus()}]")
             .appName("selfcheck-vanilla")
             .config("spark.ui.enabled", "false")
-            .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+            .config("spark.driver.memory", default_driver_memory())
             .getOrCreate()
         )
     else:
@@ -105,8 +108,8 @@ def main():
         try:
             sdf = q.spark(spark, args.sf)
             scols = sdf.columns
-            # Compare through the same pandas bridge the driver uses, so
-            # dtype drift (e.g. DuckDB HUGEINT -> float64) surfaces here too.
+            # Compare through the pandas bridge, so dtype drift (e.g.
+            # DuckDB HUGEINT -> float64) surfaces here too.
             spdf = sdf.toPandas()
             srows = [tuple(r) for r in spdf.itertuples(index=False, name=None)]
         except Exception:
