@@ -34,13 +34,22 @@ def spread(df: DataFrame) -> DataFrame:
     The driver-generated fixtures are single-row-group parquet, so a scan
     yields 1-2 splits no matter how small ``maxPartitionBytes`` goes —
     starving codegen'd map stages (shingling, signature hashing, per-dim
-    vector math) down to 1-2 of the 32 local cores (measured: MinHash
-    cold at derived sf1 ran 55 s starved vs 7.8 s spread). The condition
-    makes this a NO-OP on a real cluster: 100 TB inputs scan as thousands
-    of splits, so `getNumPartitions() < cores/2` is false and no Exchange
-    is added. Only opt-in for operators whose per-row compute dominates —
-    pure column-pruned scans and cheap filters keep their single-stage,
-    Exchange-free plans (pinned in tests/test_plans.py).
+    vector math, tokenizing) down to 1-2 cores (measured: MinHash cold at
+    derived sf1 ran 55 s starved vs 7.8 s spread). The input is
+    repartitioned round-robin to ``defaultParallelism`` only when it has
+    fewer than ``max(defaultParallelism // 2, 2)`` partitions, so this is
+    a NO-OP on a real cluster: 100 TB inputs scan as thousands of splits
+    and no Exchange is added. Only opt-in for operators whose per-row
+    compute dominates — pure column-pruned scans and cheap filters keep
+    their single-stage, Exchange-free plans (pinned in tests/test_plans.py).
+
+    Keys of the perfbench ``extract`` workload that stay unspread, and
+    why: ``chunk_split_overlap`` and ``rerank_crossencoder`` got slower
+    when spread (one traced seed-1 run of three iterations: execute
+    0.98 → 1.37 s and 0.93 → 1.43 s an iteration, Python-worker CPU
+    0.54 → 1.88 s an iteration), and the ``rlike`` of
+    ``filter_company_presence`` is pushed into the scan
+    (``test_text_filter_pushed_to_scan``), so a repartition cannot move it.
 
     Construction must stay LAZY: under AQE, ``df.rdd`` on a plan that
     contains shuffles executes those stages at DataFrame-construction

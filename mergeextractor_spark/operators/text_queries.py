@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ._util import t, r4
+from ._util import r4, spread, t
 
 EN_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "that", "for", "it"]
 _STOP_SQL = ", ".join(f"'{w}'" for w in EN_STOPWORDS)
@@ -83,25 +83,35 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     "codegen stage.",
 )
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # STAGED projections, not one flat select: the flat form inlined the
-    # tokenizer split into every ratio and r4() triplicates its argument
-    # (signum × floor-abs), so each row evaluated the split ~12× and the
-    # regex ~6× — interpreted higher-order functions, no codegen CSE.
-    # Staging materializes each non-cheap expression once per row;
-    # Catalyst's CollapseProject keeps the stages separate exactly because
-    # the aliases are non-cheap and referenced more than once. Same output
-    # values, same oracle.
+    # Staged projections over a spread scan (_util.spread: the single-split
+    # documents scan is repartitioned to the session's parallelism, so the
+    # per-row work runs on every core):
+    #   - _t tokenizes once; the token and stopword counts both read it;
+    #   - punctuation is what is left after deleting the runs of kept
+    #     characters: one regex match per run instead of one per removed
+    #     character, and the same code points as n_chars minus the length
+    #     of the text with its punctuation removed;
+    #   - ratios, then r4(), which triplicates its argument.
+    # Each non-cheap alias is referenced more than once, so Catalyst's
+    # CollapseProject keeps the stages apart and no row re-evaluates the
+    # split or the regex. Same output values, same oracle.
     txt = F.col("text")
-    staged = t(spark, sf_dir, "documents").select(
+    tokenized = spread(t(spark, sf_dir, "documents")).select(
         "doc_id",
         F.length(txt).alias("_nc"),
-        F.size(_tokens(txt)).alias("_ntok"),
-        F.size(F.filter(_tokens(txt), lambda x: x.isin(EN_STOPWORDS))).alias("_nstop"),
-        F.length(F.regexp_replace(txt, "[^a-zA-Z0-9 ]", "")).alias("_nclean"),
+        F.length(F.regexp_replace(txt, "[a-zA-Z0-9 ]+", "")).alias("_npunct"),
+        _tokens(txt).alias("_t"),
+    )
+    staged = tokenized.select(
+        "doc_id",
+        "_nc",
+        "_npunct",
+        F.size("_t").alias("_ntok"),
+        F.size(F.filter("_t", lambda x: x.isin(EN_STOPWORDS))).alias("_nstop"),
     )
     n_chars = F.col("_nc")
     punct_ratio = F.when(n_chars == 0, F.lit(0.0)).otherwise(
-        (n_chars - F.col("_nclean")).cast("double") / n_chars
+        F.col("_npunct").cast("double") / n_chars
     )
     stop_ratio = F.col("_nstop").cast("double") / F.greatest(F.col("_ntok"), F.lit(1))
     quality = F.least(n_chars / 1000.0, F.lit(1.0)) * 0.5 + (1.0 - punct_ratio) * 0.5

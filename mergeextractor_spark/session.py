@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import os
 
+import pyspark.errors.utils as _errors_utils
 from pyspark.sql import SparkSession
 
 
@@ -155,14 +156,19 @@ def get_spark(
 
 def apply_session_tuning(spark: SparkSession) -> SparkSession:
     """Idempotent runtime tuning for a session we did not create (the driver
-    hands us one in ``__spark_entry__``). Only runtime-settable confs."""
+    hands us one in ``__spark_entry__``). Only runtime-settable confs, plus
+    PySpark's cached DataFrame-debugging switch."""
     try:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        # driver-side construction overhead — see get_spark
-        spark.conf.set("spark.python.sql.dataFrameDebugging.enabled", "false")
     except Exception:
         pass
+    # DataFrame-debugging call-site capture (driver-side construction
+    # overhead — see get_spark). Its conf is static, so a running session
+    # cannot change it; PySpark reads it once per process into a module
+    # global, which is the switch left to turn it off.
+    if hasattr(_errors_utils, "_enable_debugging_cache"):
+        _errors_utils._enable_debugging_cache = False
     return spark

@@ -145,3 +145,24 @@ def test_driver_heap_default_fits_the_host():
         assert heap.endswith("m"), heap
         assert 0 < int(heap[:-1]) <= min(total_mb, cap_mb), (heap, total_mb)
     assert _driver_heap_default("MemTotal: 536870912 kB\n") == f"{cap_mb}m"
+
+
+def test_session_tuning_turns_dataframe_debugging_off_on_a_live_session(spark):
+    """spark.python.sql.dataFrameDebugging.enabled is a static conf, and
+    PySpark caches it in a module global at the first DataFrame call, so
+    on a session already in use with debugging on, setting the conf does
+    nothing; apply_session_tuning must still turn debugging off."""
+    import pyspark.errors.utils as errors_utils
+
+    from mergeextractor_spark.session import apply_session_tuning
+
+    try:
+        # a live session whose cached setting is on (the PySpark default)
+        errors_utils._enable_debugging_cache = True
+        spark.range(1).select("id").collect()
+        assert errors_utils.is_debugging_enabled()
+
+        apply_session_tuning(spark)
+        assert not errors_utils.is_debugging_enabled()
+    finally:
+        errors_utils._enable_debugging_cache = None

@@ -1,31 +1,28 @@
-"""Whole-contract plan red-flag audit (r14, detection fixed r15): build
-every registered key's DataFrame (skipping eager keys' construction side
-effects is not possible — they run; at sf0.001 that is cheap) and scan
-its FORMATTED physical plan for the scale red flags the optimization
-guide names:
+"""Whole-contract plan red-flag audit: build every registered key's
+DataFrame (eager keys' construction side effects run; at sf0.001 that is
+cheap) and scan its FORMATTED physical plan for the scale red flags the
+optimization guide names:
 
   - BatchEvalPython / ArrowEvalPython duplicated for one UDF (guide §4.4)
   - CartesianProduct / BroadcastNestedLoopJoin (accidental cross joins;
     known-intentional keys are allowlisted with the reason)
   - Exchange SinglePartition (global sort/window/keyless-agg funnels).
-    r15 fix for the r14 vacuous regex: in FORMATTED explain output the
-    partitioning lives on a separate detail line ("Arguments:
-    SinglePartition, ENSURE_REQUIREMENTS, ..."), never on the operator
-    line, so the old `Exchange SinglePartition` pattern could not match
-    anything.  scan_plan() now attributes each SinglePartition exchange
-    block-accurately to its CHILD node: exchanges fed by a reducing
+    In FORMATTED explain output the partitioning sits on the exchange's
+    detail line ("Arguments: SinglePartition, ENSURE_REQUIREMENTS, ..."),
+    not on the operator line, so scan_plan() reads each exchange block
+    and attributes it to its CHILD node: exchanges fed by a reducing
     operator (partial/final aggregate, WindowGroupLimit — one row per
     partition x group crosses) are reported as agg-reduced; any other
     child is a data-sized global funnel and flags UNEXPLAINED unless the
-    key carries a pinned reason in ALLOW_SINGLE_PARTITION (consulted,
-    ADVICE r14).  A seeded data-sized global window must be flagged —
-    pinned in tests/test_plans.py.
+    key carries a pinned reason in ALLOW_SINGLE_PARTITION.  That a
+    seeded data-sized global window is flagged is pinned in
+    tests/test_plans.py.
   - ObjectHashAggregate (sort-fallback risk class; report count)
 
-Prints one line per flagged key -> plans_audit_<round>.txt.
+Prints one line per flagged key, and writes them to --out.
 
 Usage: python tools/plan_audit.py [--sf /root/testdata/sf0.001]
-                                  [--out plans_audit_r15.txt]
+                                  [--out plans_audit.txt]
 """
 
 from __future__ import annotations
@@ -51,7 +48,7 @@ ALLOW = {
 
 # SinglePartition exchanges that are RESULT-SIZED by construction but
 # whose CHILD is not an aggregate (so the structural rule below cannot
-# prove it) — key -> reason.  Consulted by scan_plan (ADVICE r14).
+# prove it) — key -> reason.  Consulted by scan_plan.
 ALLOW_SINGLE_PARTITION: dict[str, str] = {}
 
 # A SinglePartition exchange is result-sized BY CONSTRUCTION when its
@@ -70,10 +67,10 @@ def scan_plan(key: str, plan: str) -> tuple[list[str], dict[str, int]]:
     """Scan ONE formatted physical plan for the red flags; returns
     (flag strings, per-pattern counts).  Pure text function so the
     detection rules themselves are pytest-pinned (a seeded data-sized
-    global window MUST produce a SinglePartition flag — the r14 audit's
-    `Exchange SinglePartition` regex could never match formatted mode,
-    where the partitioning lives on an `Arguments:` detail line, so its
-    '0 SinglePartition' headline was vacuous).
+    global window MUST produce a SinglePartition flag; a pattern on the
+    operator line, such as `Exchange SinglePartition`, never matches
+    formatted mode, where the partitioning lives on an `Arguments:`
+    detail line).
 
     SinglePartition attribution is block-accurate: detail blocks are
     split per node header, and the exchange's child is node id-1
@@ -156,7 +153,7 @@ def main() -> None:
 
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
-    ap.add_argument("--out", default="plans_audit_r15.txt")
+    ap.add_argument("--out", default="plans_audit.txt")
     args = ap.parse_args()
     spark = get_spark("plan-audit")
     reg = load_all()
