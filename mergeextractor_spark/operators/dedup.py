@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..registry import register
-from ._util import t, r4, spread, truncate_lineage
+from ._util import ensure_store, t, r4, spread, truncate_lineage
 
 N_HASHES = 6  # fixture-default minhash signature length (production: ~128)
 BAND_SIZE = 2  # fixture-default rows per LSH band → 3 bands (production: r≈13)
@@ -1572,35 +1572,18 @@ def minhash_store_write(spark: SparkSession, sf_dir: str, path: str) -> None:
     ).partitionBy("band", "bpfx").parquet(path)
 
 
+# code parameters of the band stores: a store written with different
+# banding parameters is never reused against an oracle that recomputes
+# bands from source
+_BAND_STORE_PARAMS = f"|n{N_HASHES}r{BAND_SIZE}m{INCR_BATCH_MOD}p1s3"
+
+
 def ensure_minhash_store(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the band-bucket store once per (warehouse, sf_dir)
-    with the ensure_ivf_store discipline: a complete dir (_SUCCESS
-    present, newer than the source fixture) is reused across sessions;
-    a husk from an interrupted write — or a store older than
-    regenerated fixtures — is cleared and rewritten.
-
-    The directory suffix folds in a code-parameter fingerprint
-    (N_HASHES/BAND_SIZE/INCR_BATCH_MOD/prefix-len/shingle-n) so a store
-    written by OLDER CODE with different banding parameters is never
-    silently reused against an oracle that recomputes bands from source."""
-    import hashlib
-    import os
-    import shutil
-
-    from .scale_queries import _source_mtime
-
-    params = f"{sf_dir}|n{N_HASHES}r{BAND_SIZE}m{INCR_BATCH_MOD}p1s3"
-    suffix = hashlib.md5(params.encode()).hexdigest()[:8]
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    path = os.path.join(wh, f"minhash_band_store_{suffix}")
-    success = os.path.join(path, "_SUCCESS")
-    fresh = os.path.isfile(success) and os.path.getmtime(
-        success
-    ) >= _source_mtime(sf_dir, ("documents",))
-    if not fresh:
-        shutil.rmtree(path, ignore_errors=True)
-        minhash_store_write(spark, sf_dir, path)
-    return path
+    """The committed-corpus band-bucket probe store (``ensure_store``)."""
+    return ensure_store(
+        spark, sf_dir, "minhash_band_store", _BAND_STORE_PARAMS, ("documents",),
+        lambda path: minhash_store_write(spark, sf_dir, path),
+    )
 
 
 def minhash_store_read(spark: SparkSession, path: str) -> DataFrame:
@@ -1648,17 +1631,30 @@ def dedup_minhash_store_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_store_read(spark, path).select("doc_id", "band", "bucket", "bpfx")
 
 
-def _batch_band_parts(bands_b: DataFrame) -> tuple[list[int], list[str]]:
-    """Distinct (band, bucket-prefix) partitions the batch can probe —
-    collected on the driver on every construction, bounded by bands x 16
-    hex prefixes (48 at fixture parameters, a few thousand in
-    production), never by corpus or batch size."""
-    rows = (
-        bands_b.select("band", F.substring("bucket", 1, 1).alias("bpfx"))
+def band_partitions(bands: DataFrame) -> tuple[list, Column]:
+    """The (band, bucket-prefix) store partitions that the band keys of
+    ``bands`` land in, and the predicate that reads exactly those.
+
+    The pairs are collected on the driver on every construction, bounded
+    by bands x 16 hex prefixes (48 at fixture parameters, a few thousand
+    in production), never by corpus or batch size.  The predicate ORs
+    the exact pairs (an ``isin(bands) & isin(prefixes)`` product would
+    also read partitions no key lands in) and is ``F.lit(False)`` when
+    there are none: an empty batch probes and rewrites nothing."""
+    import functools
+    import operator
+
+    pairs = (
+        bands.select("band", F.substring("bucket", 1, 1).alias("bpfx"))
         .distinct()
         .collect()
     )
-    return sorted({r.band for r in rows}), sorted({r.bpfx for r in rows})
+    if not pairs:
+        return pairs, F.lit(False)
+    return pairs, functools.reduce(
+        operator.or_,
+        [(F.col("band") == r.band) & (F.col("bpfx") == r.bpfx) for r in pairs],
+    )
 
 
 @register(
@@ -1711,10 +1707,8 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = d.filter(F.col("doc_id") % INCR_BATCH_MOD == 0)
     sh_b = _cache_shingles(_spread_doc_shingles(batch))
     bands_b = _bands_of(sh_b.groupBy("doc_id").agg(*_minhash_agg_cols()))
-    bands_hit, pfx_hit = _batch_band_parts(bands_b)
-    store = minhash_store_read(spark, path).filter(
-        F.col("band").isin(bands_hit) & F.col("bpfx").isin(pfx_hit)
-    )
+    _, pred = band_partitions(bands_b)
+    store = minhash_store_read(spark, path).filter(pred)
     committed = spread(d.filter(F.col("doc_id") % INCR_BATCH_MOD != 0))
     return minhash_verify_pairs(committed, sh_b, bands_b, store)
 
@@ -1781,24 +1775,16 @@ def ensure_minhash_commit_store(spark: SparkSession, sf_dir: str,
     a COMMIT target — separate from ensure_minhash_store's probe store
     so the incremental key's committed-only contract is never violated
     by a commit.  Each commit-writing key passes its own tag so their
-    stores never cross-contaminate either."""
-    import hashlib
-    import os
-    import shutil
+    stores never cross-contaminate either.  A partition that a killed
+    commit left parked is restored before the path is returned, so no
+    caller probes the store with a partition missing."""
+    from ..sources.sinks import recover_partition_swaps
 
-    from .scale_queries import _source_mtime
-
-    params = f"{sf_dir}|n{N_HASHES}r{BAND_SIZE}m{INCR_BATCH_MOD}p1s3|{tag}"
-    suffix = hashlib.md5(params.encode()).hexdigest()[:8]
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    path = os.path.join(wh, f"minhash_commit_store_{suffix}")
-    success = os.path.join(path, "_SUCCESS")
-    fresh = os.path.isfile(success) and os.path.getmtime(
-        success
-    ) >= _source_mtime(sf_dir, ("documents",))
-    if not fresh:
-        shutil.rmtree(path, ignore_errors=True)
-        minhash_store_write(spark, sf_dir, path)
+    path = ensure_store(
+        spark, sf_dir, "minhash_commit_store", f"{_BAND_STORE_PARAMS}|{tag}",
+        ("documents",), lambda p: minhash_store_write(spark, sf_dir, p),
+    )
+    recover_partition_swaps(spark, path)
     return path
 
 
@@ -1808,81 +1794,41 @@ def minhash_store_commit(spark: SparkSession, path: str,
     (band, bucket-prefix) partitions the batch lands in — the
     index-maintenance write production runs per ingest cycle.  The
     merged frame (touched-partition existing rows ∪ new rows, DISTINCT
-    so re-commits are idempotent) is written to a SIBLING STAGING
-    prefix and the touched partition directories are renamed into
-    place after the job completes — the stage-and-atomic-rename
-    protocol this docstring previously only pointed production at.
-    One write job materializes the merge (a checkpoint-then-dynamic-
-    overwrite shape would pay the merge twice — once into executor
-    storage, once into files — ~1.2 s executor-CPU per commit at sf0.1
-    for the identical on-disk result), and no task
-    ever reads a file the commit is about to replace because the
-    replacement happens driver-side after the write.  Returns the
+    so re-commits are idempotent) is published by
+    ``sinks.swap_partitions``: one write job into a sibling temp dir,
+    then each touched partition directory is swapped in by renames,
+    its old version parked aside until the whole swap has committed.
+    No task reads a file the commit replaces, because the swap runs
+    driver-side after the write.  Any parked partition of an earlier
+    killed commit is restored before the existing rows are read, so a
+    kill at any step is repaired by replaying the commit.  Returns the
     number of partitions rewritten — bounded by bands x 16 at fixture
     parameters regardless of batch or corpus size."""
-    import os
-    import shutil
+    from ..sources.sinks import recover_partition_swaps, swap_partitions
 
+    pairs, pred = band_partitions(bands_new)
+    if not pairs:
+        return 0  # empty batch: nothing lands, no partition is rewritten
+    recover_partition_swaps(spark, path)
+    existing = minhash_store_read(spark, path).filter(pred)
     new = bands_new.withColumn("bpfx", F.substring("bucket", 1, 1)).select(
         "doc_id", "bucket", "band", "bpfx"
     )
-    parts = new.select("band", "bpfx").distinct().collect()  # <= bands x 16
-    if not parts:
-        return 0  # empty batch: nothing lands, no partition is rewritten
-    # EXACT (band, bpfx) pairs — an isin(bands) & isin(prefixes) product
-    # would drag untouched partitions into the rewrite (caught by the
-    # mtime pin in tests/test_minhash_compact.py on first write)
-    import functools
-    import operator
-
-    pair_pred = functools.reduce(
-        operator.or_,
-        [
-            (F.col("band") == r.band) & (F.col("bpfx") == r.bpfx)
-            for r in parts
-        ],
-    )
-    existing = minhash_store_read(spark, path).filter(pair_pred)
     # cluster by the partition key BEFORE the distinct (guide §2.4):
     # hash-partitioning on (band, bpfx) colocates every full-tuple group
     # (the partition key is a subset of the distinct key), so the
     # dedup aggregate runs in place on the clustered exchange — ONE
     # Exchange instead of a distinct-then-repartition pair — and each
-    # write task
-    # still owns whole (band, bpfx) groups: one file per touched
-    # partition, never one per (task x partition) pair.
+    # write task still owns whole (band, bpfx) groups: one file per
+    # touched partition, never one per (task x partition) pair.
     merged = (
         existing.unionByName(new).repartition("band", "bpfx").dropDuplicates()
     )
-    staging = f"{path.rstrip('/')}__stage_{os.getpid()}"
-    try:
-        merged.write.mode("overwrite").partitionBy("band", "bpfx").parquet(
-            staging
-        )
-        # same-filesystem directory renames: each touched partition dir
-        # swaps in whole (a crash mid-loop is recovered by the replay —
-        # re-commit is idempotent by the DISTINCT union).  The loop is
-        # pure driver-side filesystem metadata work on <= bands x 16
-        # independent directories — threaded (a serial loop charges one
-        # durable-volume round-trip per partition to the commit's
-        # wall).  Band-level parent dirs are
-        # pre-created serially so the workers never race makedirs.
-        for band in {r.band for r in parts}:
-            os.makedirs(os.path.join(path, f"band={band}"), exist_ok=True)
-
-        def _swap(r) -> None:
-            rel = os.path.join(f"band={r.band}", f"bpfx={r.bpfx}")
-            target = os.path.join(path, rel)
-            shutil.rmtree(target, ignore_errors=True)
-            shutil.move(os.path.join(staging, rel), target)
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(16, len(parts))) as pool:
-            list(pool.map(_swap, parts))
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    return len(parts)
+    swap_partitions(
+        spark, path, merged, ("band", "bpfx"),
+        [f"band={r.band}/bpfx={r.bpfx}" for r in pairs],
+    )
+    return len(pairs)
 
 
 @register(
@@ -1899,11 +1845,12 @@ def minhash_store_commit(spark: SparkSession, path: str,
     doc="Incremental-dedup index COMMIT (the write-back that closes "
     "dedup_minhash_incremental's ingest cycle): the new batch "
     f"(doc_id % {INCR_BATCH_MOD} == 0) is banded and committed into "
-    "the store via DYNAMIC PARTITION OVERWRITE — only the <= bands x 16 "
+    "the store by a crash-safe partition swap — only the <= bands x 16 "
     "(band, bucket-prefix) partitions the batch lands in are "
     "rewritten (touched-partition existing rows ∪ batch rows, "
-    "DISTINCT so re-commits are idempotent; checkpointed before the "
-    "overwrite so nothing reads files mid-replace), every other "
+    "DISTINCT so re-commits are idempotent; written to a sibling temp "
+    "dir, then each partition dir renamed into place with its old "
+    "version parked until the swap commits), every other "
     "partition's files untouched (mtime-pinned in "
     "tests/test_minhash_compact.py). The returned frame re-reads the "
     "POST-COMMIT store from disk and rolls it up per partition, so the "
@@ -1919,7 +1866,7 @@ def dedup_minhash_store_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = d.filter(F.col("doc_id") % INCR_BATCH_MOD == 0)
     sh_b = _cache_shingles(_spread_doc_shingles(batch))
     # checkpoint: the commit evaluates its bands_new input twice (the
-    # partition-list collect and the merged overwrite) — the cut runs
+    # band_partitions collect and the merged write) — the cut runs
     # the signature aggregate once instead (as in the ingest cycle)
     bands_b = truncate_lineage(
         _bands_of(sh_b.groupBy("doc_id").agg(*_minhash_agg_cols()))

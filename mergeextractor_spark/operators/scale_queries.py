@@ -9,7 +9,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ._util import t, r4, spread
+from ._util import _source_mtime, ensure_store, t, r4, spread
 from .vector_queries import assign_nearest, cosine, cosine_pre, dot, l2norm
 
 N_CENTROIDS = 4
@@ -796,50 +796,13 @@ def ivf_store_probe(
     return reader.parquet(path).filter(F.col("cid").isin(cids))
 
 
-def _source_mtime(sf_dir: str, names: tuple[str, ...]) -> float:
-    """Newest mtime across the given fixture parquet files/dirs — the
-    freshness stamp for derived on-disk artifacts (bucketed tables, IVF
-    stores): a path-only guard would serve STALE derived data after
-    fixtures are regenerated in place (e.g. bench_scaling --rebuild)."""
-    import os
-
-    newest = 0.0
-    for n in names:
-        p = os.path.join(sf_dir, f"{n}.parquet")
-        if os.path.isfile(p):
-            newest = max(newest, os.path.getmtime(p))
-        elif os.path.isdir(p):
-            for root, _dirs, files in os.walk(p):
-                for f in files:
-                    newest = max(newest, os.path.getmtime(os.path.join(root, f)))
-    return newest
-
-
 def ensure_ivf_store(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the cid-partitioned IVF store once per (warehouse,
-    sf_dir) with the same location-aware discipline as
-    write_bucketed_tables: a complete dir (_SUCCESS present, newer than
-    the source fixtures) is reused as-is across sessions; a husk from an
-    interrupted write — or a store older than regenerated fixtures — is
-    cleared and rewritten.  The suffix folds in the clustering
-    parameter (N_CENTROIDS) so a store written by older code with a
-    different cell count is never silently reused (the same rule as
-    ensure_minhash_store)."""
-    import hashlib
-    import os
-    import shutil
-
-    suffix = hashlib.md5(f"{sf_dir}|c{N_CENTROIDS}".encode()).hexdigest()[:8]
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    path = os.path.join(wh, f"ivf_store_{suffix}")
-    success = os.path.join(path, "_SUCCESS")
-    fresh = os.path.isfile(success) and os.path.getmtime(success) >= _source_mtime(
-        sf_dir, ("embeddings",)
+    """The cid-partitioned IVF store (``ensure_store``); the clustering
+    parameter N_CENTROIDS is part of its fingerprint."""
+    return ensure_store(
+        spark, sf_dir, "ivf_store", f"|c{N_CENTROIDS}", ("embeddings",),
+        lambda path: ivf_store_write(spark, sf_dir, path),
     )
-    if not fresh:
-        shutil.rmtree(path, ignore_errors=True)
-        ivf_store_write(spark, sf_dir, path)
-    return path
 
 
 def _probed_cids(e: DataFrame) -> list[int]:
@@ -1042,24 +1005,11 @@ def pq_codes_write(spark: SparkSession, sf_dir: str, path: str) -> None:
 
 
 def ensure_pq_store(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the cid-partitioned PQ codes store once per
-    (warehouse, sf_dir), with the same complete-and-fresh guard as
-    ensure_ivf_store."""
-    import hashlib
-    import os
-    import shutil
-
-    suffix = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    path = os.path.join(wh, f"pq_codes_{suffix}")
-    success = os.path.join(path, "_SUCCESS")
-    fresh = os.path.isfile(success) and os.path.getmtime(success) >= _source_mtime(
-        sf_dir, ("embeddings",)
+    """The cid-partitioned PQ codes store (``ensure_store``)."""
+    return ensure_store(
+        spark, sf_dir, "pq_codes", "", ("embeddings",),
+        lambda path: pq_codes_write(spark, sf_dir, path),
     )
-    if not fresh:
-        shutil.rmtree(path, ignore_errors=True)
-        pq_codes_write(spark, sf_dir, path)
-    return path
 
 
 @register(

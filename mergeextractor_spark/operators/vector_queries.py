@@ -17,8 +17,9 @@ from ..registry import register
 from ._util import t, r4, spread, truncate_lineage, golden_path
 
 
-# The vector helpers accept Column | str (r15): a str argument is a SQL
-# fragment (usually a plain column name), and an all-str call arrives as
+# The vector helpers accept Column | str: a str argument is a SQL
+# fragment (usually a plain column name, parsed by F.expr also on a mixed
+# str/Column call), and an all-str call arrives as
 # ONE parsed SQL expression instead of ~40 py4j round trips building the
 # zip_with/aggregate lambdas through the Column DSL.  Measured (guide §1
 # empirical loop): each DSL dot()/l2norm() costs ~70 ms of DRIVER-side
@@ -45,8 +46,8 @@ def _l2norm_sql(a: str) -> str:
 def dot(a: "Column | str", b: "Column | str") -> Column:
     if isinstance(a, str) and isinstance(b, str):
         return F.expr(_dot_sql(a, b))
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
+    a = F.expr(a) if isinstance(a, str) else a
+    b = F.expr(b) if isinstance(b, str) else b
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -84,8 +85,8 @@ def cosine_pre(
     OPTIMIZATION_r14.md)."""
     if all(isinstance(x, str) for x in (a, b, na, nb)):
         return F.expr(f"{_dot_sql(a, b)} / ({na} * {nb})")
-    na = F.col(na) if isinstance(na, str) else na
-    nb = F.col(nb) if isinstance(nb, str) else nb
+    na = F.expr(na) if isinstance(na, str) else na
+    nb = F.expr(nb) if isinstance(nb, str) else nb
     return dot(a, b) / (na * nb)
 
 

@@ -51,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators._util import t, truncate_lineage
+from ..operators._util import ensure_store, t, truncate_lineage
 from ..registry import register
 
 # Merge rounds.  The timed bench suite overrides this DOWN via env
@@ -270,29 +270,14 @@ def bpe_store_write(spark: SparkSession, sf_dir: str, path: str,
 
 def ensure_bpe_store(spark: SparkSession, sf_dir: str,
                      rounds: int = BPE_TRAIN_ROUNDS) -> str:
-    """Materialize the merge store once per (warehouse, sf_dir, training
-    parameters) — the ensure_clf_store discipline: _SUCCESS-freshness vs
-    the documents fixture plus a code-parameter fingerprint in the
-    directory suffix (rounds + representation version), so a store
-    trained by older code or a reduced-round bench profile is never
-    served to an oracle that trains full counts."""
-    import hashlib
-    import os
-    import shutil
-
-    from ..operators.scale_queries import _source_mtime
-
-    suffix = hashlib.md5(f"{sf_dir}|r{rounds}v1".encode()).hexdigest()[:8]
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    path = os.path.join(wh, f"bpe_merge_store_{suffix}")
-    success = os.path.join(path, "_SUCCESS")
-    fresh = os.path.isfile(success) and os.path.getmtime(
-        success
-    ) >= _source_mtime(sf_dir, ("documents",))
-    if not fresh:
-        shutil.rmtree(path, ignore_errors=True)
-        bpe_store_write(spark, sf_dir, path, rounds=rounds)
-    return path
+    """The trained merge store (``ensure_store``); the round count and
+    the representation version are part of its fingerprint, so a store
+    trained with a reduced-round bench profile is never served to an
+    oracle that trains full counts."""
+    return ensure_store(
+        spark, sf_dir, "bpe_merge_store", f"|r{rounds}v1", ("documents",),
+        lambda path: bpe_store_write(spark, sf_dir, path, rounds=rounds),
+    )
 
 
 def bpe_store_read(spark: SparkSession, path: str) -> DataFrame:

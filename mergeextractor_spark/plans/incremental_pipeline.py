@@ -20,11 +20,13 @@ Plan shape per batch:
 3. **Quality gate**: the Gopher word-count bounds (50..100000 tokens)
    on the surviving new rows — same family as text_gopher_rules, one
    map stage.
-4. **Atomic append**: survivors land in a staging directory that is
-   RENAMED into the store only after a `_BATCH_<id>` marker commits; a
-   marker that already exists short-circuits the whole batch
-   (idempotent replay). A crash before the rename leaves the store
-   untouched (same discipline as sources/sinks.py merge_kv_store).
+4. **Atomic append**: survivors land in a staging directory whose
+   files are moved into the store after the write completes, and a
+   `_BATCH_<id>` marker then commits the batch; a marker that already
+   exists short-circuits the whole batch (idempotent replay). The append
+   only adds files and never removes committed data, so no crash can
+   lose rows: before the moves the store is untouched, and a replay
+   after a partial move dedups the moved rows against the store.
 
 Registered as ``pipeline_incremental_ingest`` with a FULL exact oracle:
 the bloom is the md5-sliced one, so DuckDB recomputes every
@@ -273,7 +275,7 @@ def _ingest_cycle_oracle() -> str:
     "semi-join-pruned before shingling, exact Jaccard >= 0.2), and any "
     "batch doc with a verified pair drops via a distributed anti-join; "
     "(3) COMMIT — survivors' band keys are committed into the store by "
-    "dynamic partition overwrite (exact touched partitions only, "
+    "a crash-safe partition swap (exact touched partitions only, "
     "idempotent distinct union). The summary row's n_store_docs "
     "re-reads the POST-COMMIT store from disk, so the hash row proves "
     "the whole cycle: gates, probe, and the committed index state. "
@@ -286,9 +288,6 @@ def _ingest_cycle_oracle() -> str:
     eager=True,  # construction builds the store, probes, and commits
 )
 def pipeline_ingest_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import functools
-    import operator
-
     from ..operators._util import spread, truncate_lineage
     from ..operators.dedup import (
         INCR_BATCH_MOD,
@@ -296,6 +295,7 @@ def pipeline_ingest_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cache_shingles,
         _minhash_agg_cols,
         _spread_doc_shingles,
+        band_partitions,
         ensure_minhash_commit_store,
         minhash_store_commit,
         minhash_store_read,
@@ -335,33 +335,15 @@ def pipeline_ingest_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without the cut each consumer re-runs the signature aggregate
     # (profiled: commit alone re-evaluated the whole verify tail twice,
     # 5.5 s executor-CPU of the cycle's 8.4 s).  LAZY: the cut
-    # materializes inside its first consumer, the partition-list collect
+    # materializes inside its first consumer, the band_partitions collect
     # below, instead of as a job of its own.
     bands_b = truncate_lineage(
         _bands_of(sh_b.groupBy("doc_id").agg(*_minhash_agg_cols())),
         eager=False,
     )
-    # the (band, bpfx) store partitions the batch can probe, collected on
-    # the driver on every construction: bounded by bands x 16 hex
-    # prefixes, never by corpus or batch size
-    parts = (
-        bands_b.select("band", F.substring("bucket", 1, 1).alias("bpfx"))
-        .distinct()
-        .collect()
-    )
-    # empty batch (quiet ingest day): no band keys → no touched partitions
-    # → the probed store slice is empty by construction
-    pair_pred = (
-        functools.reduce(
-            operator.or_,
-            [
-                (F.col("band") == r.band) & (F.col("bpfx") == r.bpfx)
-                for r in parts
-            ],
-        )
-        if parts
-        else F.lit(False)
-    )
+    # the exact (band, bpfx) store partitions the batch can probe (an
+    # empty batch on a quiet ingest day probes an empty slice)
+    _, pair_pred = band_partitions(bands_b)
     store = minhash_store_read(spark, path).filter(
         # committed slice only: previously committed survivors (%M == 0)
         # must never self-match on a re-run

@@ -9,11 +9,10 @@ runs the full DataSourceWriter lifecycle:
   overwrites its own file instead of duplicating rows (idempotent
   tasks, the write-side half of exactly-once);
 - ``commit(messages)`` publishes atomically: staged files move into
-  the target directory and a ``_SUCCESS`` manifest lists exactly the
-  committed files — readers that filter on the manifest never observe
-  a half-written batch (the write-temp-and-swap discipline
-  sources/sinks.py uses for merge_kv_store, expressed through the
-  engine-managed commit hook);
+  the target directory (``os.replace``: a file of the same name is
+  swapped whole, never deleted first) and a ``_SUCCESS`` manifest lists
+  exactly the committed files — readers that filter on the manifest
+  never observe a half-written batch;
 - ``abort(messages)`` removes the staging directory, leaving the
   target untouched.
 

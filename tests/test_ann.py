@@ -1,5 +1,5 @@
 """ANN retrieval-quality guards: the approximate paths must stay close to
-the exact brute-force baseline, not just run (VERDICT r1: nprobe=1 gave
+the exact brute-force baseline, not just run (nprobe=1 gave
 recall 0.67, which is not production-grade retrieval)."""
 
 from mergeextractor_spark.registry import load_all
@@ -117,3 +117,32 @@ def test_semdedup_marks_exactly_the_clones(spark):
     # everything else keeps itself
     keep = df.filter("NOT is_dup")
     assert keep.filter("vec_id <> rep_id").count() == 0
+
+
+def test_mixed_str_column_vector_helpers_parse_sql_fragments(spark):
+    """A str argument of dot/cosine_pre is a SQL fragment on a mixed
+    str/Column call too: it must give the all-str call's value, not an
+    unresolved-column error for the fragment's text."""
+    from pyspark.sql import functions as F
+
+    from mergeextractor_spark.operators.vector_queries import (
+        _l2norm_sql,
+        cosine_pre,
+        dot,
+    )
+
+    df = spark.createDataFrame(
+        [([1.0, 2.0, 2.0], [3.0, 0.5, 4.0])], "a array<double>, b array<double>"
+    )
+    twice = "transform(b, x -> x * 2)"
+    row = df.select(
+        dot("a", twice).alias("dot_str"),
+        dot(F.col("a"), twice).alias("dot_mixed"),
+        cosine_pre("a", "b", _l2norm_sql("a"), _l2norm_sql("b")).alias("cos_str"),
+        cosine_pre(
+            F.col("a"), F.col("b"), _l2norm_sql("a"), _l2norm_sql("b")
+        ).alias("cos_mixed"),
+    ).first()
+    assert row.dot_mixed == row.dot_str == 2 * (3.0 + 1.0 + 8.0)
+    assert row.cos_mixed == row.cos_str
+    assert abs(row.cos_str - 12.0 / (3.0 * (9.25 + 16.0) ** 0.5)) < 1e-12

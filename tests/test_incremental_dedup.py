@@ -1,6 +1,6 @@
-"""dedup_minhash_store_write / dedup_minhash_incremental pins
-(VERDICT r12 item 5): the persisted band-bucket store and its
-batch probe.
+"""dedup_minhash_store_write / dedup_minhash_incremental pins: the
+persisted band-bucket store and its batch probe, and the one store
+builder (``_util.ensure_store``) every derived store goes through.
 
 Proofs:
   1. the probe's store read is PARTITION-PRUNED — the scan plan carries
@@ -15,7 +15,8 @@ Proofs:
      (same bands, same verify threshold — the store layout loses
      nothing);
   4. store hygiene: a stale/incomplete store is rewritten, a fresh one
-     is reused (ensure_minhash_store's mtime guard).
+     is reused (ensure_store's freshness guard), and each of the six
+     derived stores keeps its fingerprinted warehouse path.
 """
 
 from __future__ import annotations
@@ -132,3 +133,121 @@ def test_ensure_store_reuses_fresh_and_rewrites_stale(spark):
     os.remove(os.path.join(p1, "_SUCCESS"))  # husk: incomplete write
     p3 = ensure_minhash_store(spark, SF)
     assert os.path.isfile(os.path.join(p3, "_SUCCESS"))  # rewritten
+
+
+def _stub_writer(calls):
+    """A store writer that writes nothing but ``_SUCCESS``."""
+    import os
+
+    def write(path):
+        calls.append(path)
+        os.makedirs(path)
+        open(os.path.join(path, "_SUCCESS"), "w").close()
+
+    return write
+
+
+def _stub_sf(tmp_path):
+    import os
+
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    for name in ("documents", "embeddings"):
+        open(os.path.join(sf, f"{name}.parquet"), "w").close()
+    return sf
+
+
+def test_ensure_store_rewrites_husks_and_stores_older_than_sources(spark, tmp_path):
+    import os
+    import shutil
+
+    from mergeextractor_spark.operators._util import ensure_store
+
+    sf = _stub_sf(tmp_path)
+    calls = []
+    write = _stub_writer(calls)
+
+    def ensure():
+        return ensure_store(spark, sf, "stub_store", "|x1", ("documents",), write)
+
+    path = ensure()
+    try:
+        success = os.path.join(path, "_SUCCESS")
+        assert calls == [path]
+        assert ensure() == path and len(calls) == 1  # fresh: reused
+        os.remove(success)  # husk of an interrupted write
+        assert ensure() == path and len(calls) == 2
+        # the source fixture is newer than the store: cleared and rewritten,
+        # together with the store's partition-swap leftovers
+        open(os.path.join(path, "stale"), "w").close()
+        os.makedirs(f"{path}__merge_old_0")
+        old = os.path.getmtime(os.path.join(sf, "documents.parquet")) - 10
+        os.utime(success, (old, old))
+        assert ensure() == path and len(calls) == 3
+        assert not os.path.exists(os.path.join(path, "stale"))
+        assert not os.path.exists(f"{path}__merge_old_0")
+        assert ensure() == path and len(calls) == 3
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def test_derived_stores_keep_their_fingerprinted_paths(spark, tmp_path, monkeypatch):
+    """Each store's path is <warehouse>/<name>_<md5(sf_dir + params)[:8]>
+    with the name and parameter string it has always had, so no existing
+    store is orphaned by the shared builder."""
+    import hashlib
+    import os
+    import shutil
+
+    from mergeextractor_spark.operators import dedup, scale_queries
+    from mergeextractor_spark.plans import bpe_pipeline, classifier_pipeline
+
+    sf = _stub_sf(tmp_path)
+    calls = []
+    write = _stub_writer(calls)
+
+    def stub(spark, sf_dir, path, **params):
+        write(path)
+
+    for mod, fn in (
+        (scale_queries, "ivf_store_write"),
+        (scale_queries, "pq_codes_write"),
+        (dedup, "minhash_store_write"),
+        (bpe_pipeline, "bpe_store_write"),
+        (classifier_pipeline, "clf_store_write"),
+    ):
+        monkeypatch.setattr(mod, fn, stub)
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+
+    def at(name, params):
+        return os.path.join(wh, f"{name}_{hashlib.md5(params.encode()).hexdigest()[:8]}")
+
+    band = f"{sf}|n{dedup.N_HASHES}r{dedup.BAND_SIZE}m{dedup.INCR_BATCH_MOD}p1s3"
+    clf = classifier_pipeline
+    want = {
+        "ivf": at("ivf_store", f"{sf}|c{scale_queries.N_CENTROIDS}"),
+        "pq": at("pq_codes", sf),
+        "band": at("minhash_band_store", band),
+        "commit": at("minhash_commit_store", f"{band}|c"),
+        "cycle": at("minhash_commit_store", f"{band}|cycle"),
+        "bpe": at("bpe_merge_store", f"{sf}|r{bpe_pipeline.BPE_TRAIN_ROUNDS}v1"),
+        "clf": at(
+            "clf_weight_store",
+            f"{sf}|b{clf.CLF_BUCKETS}s{clf.CLF_SCALE}r{clf.CLF_ROUNDS}h3",
+        ),
+    }
+    try:
+        got = {
+            "ivf": scale_queries.ensure_ivf_store(spark, sf),
+            "pq": scale_queries.ensure_pq_store(spark, sf),
+            "band": dedup.ensure_minhash_store(spark, sf),
+            "commit": dedup.ensure_minhash_commit_store(spark, sf),
+            "cycle": dedup.ensure_minhash_commit_store(spark, sf, tag="cycle"),
+            "bpe": bpe_pipeline.ensure_bpe_store(spark, sf),
+            "clf": classifier_pipeline.ensure_clf_store(spark, sf),
+        }
+        assert got == want
+        assert sorted(calls) == sorted(want.values())
+    finally:
+        for p in want.values():
+            shutil.rmtree(p, ignore_errors=True)

@@ -1,5 +1,5 @@
-"""pipeline_ingest_cycle pins (r14 flagship #12 — exact gate → minhash
-near-dup probe → partition-scoped index commit, composed end-to-end).
+"""pipeline_ingest_cycle pins: exact gate → minhash near-dup probe →
+partition-scoped index commit, composed end-to-end.
 
 Proofs:
   1. stage arithmetic against independent recomputation: the exact gate

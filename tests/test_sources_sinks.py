@@ -98,7 +98,7 @@ def test_with_bucket_values(filings_df):
 
 
 def test_kv_merge_kill_mid_swap_recovers(spark, filings_df, tmp_path, monkeypatch):
-    """VERDICT r3 item 7: a merge killed mid-swap must leave the store
+    """A merge killed mid-swap must leave the store
     recoverable — every bucket at its old or new version except at most
     one parked in the backup dir, and the next merge call restores it and
     converges to the exact merged state (idempotent re-apply)."""
@@ -114,18 +114,18 @@ def test_kv_merge_kill_mid_swap_recovers(spark, filings_df, tmp_path, monkeypatc
         "content", F.lit("merged-row")
     )
 
-    real = sinks._swap_bucket
+    real = sinks._swap_partition
     calls = []
 
-    def flaky(fs, P, store, tmp, backup, bucket):
-        calls.append(bucket)
+    def flaky(fs, P, store, tmp, backup, part):
+        calls.append(part)
         if len(calls) == 2:
             # die in the nastiest window: old bucket parked, new not placed
-            assert fs.rename(P(f"{store}/bucket={bucket}"), P(f"{backup}/bucket={bucket}"))
+            assert fs.rename(P(f"{store}/{part}"), P(f"{backup}/{part}"))
             raise RuntimeError("simulated death mid-swap")
-        real(fs, P, store, tmp, backup, bucket)
+        real(fs, P, store, tmp, backup, part)
 
-    monkeypatch.setattr(sinks, "_swap_bucket", flaky)
+    monkeypatch.setattr(sinks, "_swap_partition", flaky)
     with pytest.raises(RuntimeError, match="mid-swap"):
         merge_kv_store(spark, updates, path)
     monkeypatch.undo()
